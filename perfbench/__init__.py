@@ -1,0 +1,5 @@
+"""Layered benchmark for the MC battery and the query registry.
+
+Run it with ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root; see README.md.
+"""
