@@ -6,31 +6,38 @@ Reference surface (``parallel_simulations.py:18-33``):
                                                 output_paths=None)
 
 Spark re-expression: the unit of parallelism is a *shard of simulations*
-(``(model_id, sim_lo, sim_hi)`` rows in a config DataFrame), not one
-element per model as in the reference (``parallel_simulations.py:50-57``,
-which caps parallelism at ``len(models)``). Each shard runs inside an
-Arrow-batched ``mapInPandas`` where the user callable is invoked with the
-reference's exact call convention (3-way arity dispatch at
-``parallel_simulations.py:80-95``, extended with the missing
-``starting_point``-only combo). The result is a queryable DataFrame
-``(model_id, sim_id, trace)`` — the reference's CSV files become an
-optional export (:mod:`.sinks`) instead of the only output.
+(a contiguous ``[sim_lo, sim_hi)`` range of one model, one row of a
+``spark.range`` over the shard indices), not one element per model as in
+the reference (``parallel_simulations.py:50-57``, which caps parallelism
+at ``len(models)``). Each shard runs inside an Arrow ``mapInArrow`` where
+the user callable is invoked with the reference's exact call convention
+(3-way arity dispatch at ``parallel_simulations.py:80-95``, extended with
+the missing ``starting_point``-only combo). The result is a queryable
+DataFrame ``(model_id, sim_id, trace)``. When the battery exports, the same
+tasks also format each shard's CSV text, and :mod:`.sinks` writes the
+reference's per-model files from that one job: no shuffle, no sort, one
+Python pass.
 
 Scale: 1e9 simulations × 1000 models is just ``total/batch_size`` rows in
-the config DataFrame fanned across the cluster; traces never gather on
-the driver; seeds derive deterministically inside tasks (retry-safe).
+the shard range fanned across the cluster; traces never gather on the
+driver unless exported to CSV; seeds derive deterministically inside
+tasks (retry-safe).
 """
 
 from __future__ import annotations
 
+import bisect
+import csv
+import io
 import logging
 import math
 from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import sinks
 from .models import BatteryConfigs, SimulationConfig, validate_simulation_configs
-from .seeds import fresh_master_seed
+from .seeds import fresh_master_seed, rng_for
 
 logger = logging.getLogger(__name__)
 
@@ -97,7 +104,8 @@ class MCBattery:
         If ``output_paths`` is given (or cached from a prior call), also
         export one CSV per model with the reference's format: one
         comma-joined row per trace, no header, overwrite
-        (``utils.py:15-23``).
+        (``utils.py:15-23``). The exported frame comes back cached; its
+        ``unpersist()`` releases the cache.
         """
         if len(models) != len(simulation_configs):
             raise ValueError(
@@ -134,20 +142,28 @@ class MCBattery:
         self.last_master_seed = seed
         logger.info("MCBattery.simulate master_seed=%d", seed)
 
-        df = self._trace_frame(spark, list(models), cfgs, seed, trace_dtype)
-
         # Working output_paths cache (documented reference semantics,
         # notebook cell 35; the reference's implementation clobbers it).
         if output_paths is not None:
             self.output_paths = list(output_paths)
-        if self.output_paths is not None:
-            from .sinks import export_traces_csv
+        export = self.output_paths is not None
+        df = self._trace_frame(spark, list(models), cfgs, seed, trace_dtype, export)
+        if not export:
+            return df
 
-            # The simulation UDF is nondeterministic from Spark's point of
-            # view; persist so export and returned-DF reads agree.
-            df = df.persist()
-            export_traces_csv(df, dict(enumerate(self.output_paths)))
-        return df
+        # One job simulates, caches the traces and carries each shard's
+        # CSV text to the driver. Looked up at call time so that wrappers
+        # of the sink see the call.
+        full = df.persist()
+        sinks.export_traces_csv(full, dict(enumerate(self.output_paths)))
+        # The caller gets the trace columns, cached on their own, so that
+        # their unpersist() releases everything; the copy reads the cache
+        # the export filled (the simulation is nondeterministic to Spark
+        # and must not run twice).
+        traces = full.drop("csv").persist()
+        traces.write.format("noop").mode("overwrite").save()
+        full.unpersist()
+        return traces
 
     # -- internals ----------------------------------------------------
 
@@ -158,58 +174,71 @@ class MCBattery:
         cfgs: list[SimulationConfig],
         master_seed: int,
         trace_dtype: str,
+        export: bool,
     ) -> DataFrame:
-        shards: list[tuple[int, int, int]] = []
-        for model_id, cfg in enumerate(cfgs):
-            n, bs = cfg.number_simulations, cfg.batch_size
-            for b in range(math.ceil(n / bs)):
-                shards.append((model_id, b * bs, min((b + 1) * bs, n)))
-
-        shard_df = spark.createDataFrame(
-            shards, schema="model_id long, sim_lo long, sim_hi long"
-        ).repartition(max(len(shards), spark.sparkContext.defaultParallelism))
+        # Shard i of the battery is shard i - first_shard[m] of model m:
+        # only these offsets ship in the closure, never a row per shard.
+        first_shard = [0]
+        for cfg in cfgs:
+            first_shard.append(first_shard[-1] + math.ceil(cfg.number_simulations / cfg.batch_size))
+        n_shards = first_shard[-1]
+        shard_df = spark.range(
+            n_shards, numPartitions=max(n_shards, spark.sparkContext.defaultParallelism)
+        )
 
         bit_gen_cls = self.configs.bit_generator()
-        cfg_by_model = {
-            i: (c.number_points, c.parameters, c.starting_point)
-            for i, c in enumerate(cfgs)
-        }
+        cfg_by_model = [
+            (c.number_points, c.parameters, c.starting_point, c.number_simulations, c.batch_size)
+            for c in cfgs
+        ]
         cast = str if trace_dtype == "string" else float
+        schema = _TRACE_SCHEMA[trace_dtype] + (", csv string" if export else "")
+        names = ["model_id", "sim_id", "trace"] + (["csv"] if export else [])
 
         def run_shards(batches: Iterator) -> Iterator:
             # Runs on executors; models/cfg_by_model arrive via the
             # cloudpickled closure (same mechanism as Beam's DoFn capture
             # of battery state at reference parallel_simulations.py:68).
-            import numpy as np
-            import pandas as pd
+            import pyarrow as pa
 
-            for pdf in batches:
-                for model_id, sim_lo, sim_hi in pdf.itertuples(index=False):
-                    model = models[model_id]
-                    number_points, parameters, starting_point = cfg_by_model[model_id]
-                    sim_ids, traces = [], []
-                    for sim_id in range(sim_lo, sim_hi):
-                        rng = np.random.Generator(
-                            bit_gen_cls(
-                                np.random.SeedSequence(
-                                    [master_seed, model_id, sim_id]
-                                )
+            trace_type = pa.list_(pa.string() if trace_dtype == "string" else pa.float64())
+            for batch in batches:
+                for shard in batch.column(0).to_pylist():
+                    model_id = bisect.bisect_right(first_shard, shard) - 1
+                    number_points, parameters, starting_point, n, bs = cfg_by_model[model_id]
+                    sim_lo = (shard - first_shard[model_id]) * bs
+                    sim_ids = range(sim_lo, min(sim_lo + bs, n))
+                    traces = [
+                        [
+                            cast(p)
+                            for p in _call_model(
+                                models[model_id],
+                                number_points,
+                                rng_for(bit_gen_cls, master_seed, model_id, sim_id),
+                                parameters,
+                                starting_point,
                             )
+                        ]
+                        for sim_id in sim_ids
+                    ]
+                    # Built straight from Python lists: a NaN stays NaN
+                    # (pandas' Arrow conversion would turn it into null).
+                    columns = [
+                        pa.array([model_id] * len(sim_ids), pa.int64()),
+                        pa.array(sim_ids, pa.int64()),
+                        pa.array(traces, trace_type),
+                    ]
+                    if export:
+                        # The shard's CSV text, reference format, rides on
+                        # its first row for the driver to concatenate.
+                        buf = io.StringIO(newline="")
+                        csv.writer(buf).writerows(traces)
+                        columns.append(
+                            pa.array([buf.getvalue()] + [None] * (len(sim_ids) - 1), pa.string())
                         )
-                        trace = _call_model(
-                            model, number_points, rng, parameters, starting_point
-                        )
-                        sim_ids.append(sim_id)
-                        traces.append([cast(p) for p in trace])
-                    yield pd.DataFrame(
-                        {
-                            "model_id": np.full(len(sim_ids), model_id, dtype="int64"),
-                            "sim_id": np.asarray(sim_ids, dtype="int64"),
-                            "trace": traces,
-                        }
-                    )
+                    yield pa.RecordBatch.from_arrays(columns, names=names)
 
-        return shard_df.mapInPandas(run_shards, schema=_TRACE_SCHEMA[trace_dtype])
+        return shard_df.mapInArrow(run_shards, schema=schema)
 
 
 #: Alias matching the reference's public class name

@@ -100,7 +100,7 @@ def audit(df: DataFrame) -> PlanAudit:
         has_take_ordered="TakeOrderedAndProject" in plan,
         n_codegen_spans=n_spans,
         n_python_evals=len(
-            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas", plan)
+            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow", plan)
         ),
         plan=plan,
     )

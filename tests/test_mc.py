@@ -414,3 +414,183 @@ def test_hashrng_twins_statistics(spark):
     avg = sum(r.max_drawdown for r in dd) / len(dd)
     # E[max drawdown] of a 50-step standard random walk is a few sigma*sqrt(n)
     assert 1.0 < avg < 30.0, avg
+
+
+# -- CSV export: byte identity, NaN parity, one pass, retries ------------
+
+
+def _reference(model, cfg, bit_gen, master_seed, model_id, cast=str):
+    """Serial numpy reference of one model, no Spark: its traces and the
+    CSV text ``csv.writer`` makes of them (reference ``utils.py:19-23``)."""
+    import csv
+    import io
+
+    import numpy as np
+
+    args = (cfg["parameters"],) if "parameters" in cfg else ()
+    if "starting_point" in cfg:
+        args = (cfg.get("parameters"), cfg["starting_point"])
+    traces = []
+    for sim_id in range(cfg["number_simulations"]):
+        rng = np.random.Generator(
+            bit_gen(np.random.SeedSequence([master_seed, model_id, sim_id]))
+        )
+        traces.append([cast(p) for p in model(cfg["number_points"], rng, *args)])
+    buf = io.StringIO(newline="")
+    csv.writer(buf).writerows(traces)
+    return traces, buf.getvalue()
+
+
+def quoted(number_points, rng, parameters=None):
+    """String fields csv.writer must quote or leave empty."""
+    fields = ["a,b", 'q"x', "line\nbreak", "", "plain"]
+    return [fields[i] for i in rng.integers(0, len(fields), size=number_points)]
+
+
+def special(number_points, rng, parameters=None):
+    return [rng.random(), float("nan"), float("inf"), -0.0, 1e-05, 1e16]
+
+
+@pytest.mark.parametrize("rng_name", sorted(RNG_MAPPING))
+def test_csv_bytes_match_serial_reference(spark, tmp_path, rng_name):
+    """Several shards per model with an uneven last one, 3- and 4-argument
+    calls, fields that need quoting, and output batches smaller than a
+    shard: every file equals the serial reference byte for byte, and the
+    returned frame holds the same traces."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    cfgs = [
+        {"number_simulations": 30, "number_points": 5, "parameters": [0.5], "batch_size": 7},
+        {"number_simulations": 17, "number_points": 3, "parameters": [0.3],
+         "starting_point": ["T", "T"], "batch_size": 5},
+        {"number_simulations": 12, "number_points": 4, "parameters": [1], "batch_size": 5},
+    ]
+    models = [coin, coin, quoted]
+    paths = [str(tmp_path / f"{i}.txt") for i in range(len(models))]
+    battery = MCBattery({"rng": rng_name, "master_seed": 2024, "spark_conf": {key: "3"}})
+    try:
+        df = battery.simulate(models, cfgs, output_paths=paths, spark=spark)
+        rows = {(r.model_id, r.sim_id): r.trace for r in df.collect()}
+    finally:
+        spark.conf.set(key, prev)
+    bit_gen = RNG_MAPPING[rng_name]
+    for model_id, (model, cfg, path) in enumerate(zip(models, cfgs, paths)):
+        traces, text = _reference(model, cfg, bit_gen, 2024, model_id)
+        with open(path, "rb") as fh:
+            assert fh.read() == text.encode(), (rng_name, model_id)
+        assert [rows[(model_id, s)] for s in range(len(traces))] == traces
+    assert len(rows) == sum(c["number_simulations"] for c in cfgs)
+
+
+def test_nan_survives_to_frame_and_csv(spark, tmp_path):
+    """A NaN in a double trace stays NaN in the returned frame and is
+    written ``nan`` in the CSV, as ``csv.writer`` writes it for the
+    reference (an Arrow conversion through pandas would make it null)."""
+    cfg = {"number_simulations": 9, "number_points": 1, "batch_size": 4}
+    path = str(tmp_path / "special.txt")
+    df = MCBattery({"rng": "PCG64", "master_seed": 3}).simulate(
+        [special], [cfg], output_paths=[path], spark=spark, trace_dtype="double"
+    )
+    rows = sorted(df.collect())
+    assert len(rows) == 9
+    for r in rows:
+        assert math.isnan(r.trace[1]) and r.trace[2] == math.inf
+        assert math.copysign(1.0, r.trace[3]) == -1.0 and r.trace[4:] == [1e-05, 1e16]
+    _, text = _reference(special, cfg, RNG_MAPPING["PCG64"], 3, 0, cast=float)
+    with open(path, "rb") as fh:
+        written = fh.read()
+    assert written == text.encode()
+    assert {line.split(",", 1)[1] for line in written.decode().splitlines()} == {
+        "nan,inf,-0.0,1e-05,1e+16"
+    }
+
+
+def test_export_is_one_pass_without_exchange(spark, tmp_path):
+    """An exporting battery fires at most two jobs (simulate-and-export,
+    then a copy of the cached traces) and shuffles nothing; the frame it
+    returns is cached, and its unpersist() empties the cache."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    cfgs = [
+        {"number_simulations": 40, "number_points": 4, "parameters": [0.5], "batch_size": 9},
+        {"number_simulations": 25, "number_points": 6, "parameters": [0.7], "batch_size": 9},
+    ]
+    group = "test_export_is_one_pass"
+    sc.setJobGroup(group, group)
+    try:
+        exported = MCBattery({"rng": "SFC64", "master_seed": 8}).simulate(
+            [coin, coin], cfgs, output_paths=[str(tmp_path / "0.txt"), str(tmp_path / "1.txt")],
+            spark=spark,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    lazy = MCBattery({"rng": "SFC64", "master_seed": 8}).simulate([coin, coin], cfgs, spark=spark)
+    for frame in (exported, lazy):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Exchange" not in plan, plan
+    assert exported.columns == lazy.columns == ["model_id", "sim_id", "trace"]
+    assert sorted(exported.collect()) == sorted(lazy.collect())
+    assert exported.is_cached
+    exported.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_RETRY_SCRIPT = r"""
+import hashlib, json, os, sys
+from pyspark import TaskContext
+from parallel_monte_carlo_simulations_spark import MCBattery
+from parallel_monte_carlo_simulations_spark.session import get_spark
+
+out = sys.argv[1]
+spark = get_spark(app_name="mc-retry", master="local[2,3]", shuffle_partitions=2,
+                  extra_conf={"spark.driver.memory": "1g"})
+
+def coin(number_points, rng, parameters):
+    return ["H" if rng.random() <= parameters[0] else "T" for _ in range(number_points)]
+
+def flaky(number_points, rng, parameters):
+    # One shard per partition: partition 1 is the second shard of model 0.
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 1 and ctx.attemptNumber() == 0:
+        open(os.path.join(out, f"failed-{ctx.taskAttemptId()}"), "w").close()
+        raise RuntimeError("injected first-attempt failure")
+    return coin(number_points, rng, parameters)
+
+cfgs = [{"number_simulations": 30, "number_points": 8, "parameters": [0.5], "batch_size": 10},
+        {"number_simulations": 20, "number_points": 5, "parameters": [0.6], "batch_size": 10}]
+result = {}
+for name, first in (("clean", coin), ("retried", flaky)):
+    paths = [os.path.join(out, f"{name}{i}.txt") for i in range(2)]
+    df = MCBattery({"rng": "Philox", "master_seed": 77}).simulate(
+        [first, coin], cfgs, output_paths=paths, spark=spark)
+    result[name] = {
+        "csv": [hashlib.sha256(open(p, "rb").read()).hexdigest() for p in paths],
+        "rows": sorted(map(str, df.collect())),
+    }
+result["failed_attempts"] = sum(f.startswith("failed-") for f in os.listdir(out))
+print(json.dumps(result))
+spark.stop()
+"""
+
+
+def test_task_retry_leaves_csv_and_traces_unchanged(tmp_path):
+    """Under real task retries (``local[2,3]``), a shard whose first
+    attempt fails yields the same CSV bytes and traces as a clean run:
+    CSV blocks carried in task results are neither lost nor duplicated."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=240,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["failed_attempts"] == 1
+    assert result["retried"] == result["clean"]
+    assert len(result["clean"]["rows"]) == 50
